@@ -118,11 +118,8 @@ def main() -> None:
 
     calibration = {"start": _calibrate(spark)}
 
-    from phabricator_etl_spark.plans import incremental_runner as IR
-
     timings: dict[str, float] = {}
     errors: dict[str, str] = {}
-    phase_timings: dict[str, list] = {}
     total = 0.0
     # debug-only subset filter: smoke the refine/tail measurement machinery
     # on a handful of queries without paying the full 225-query first pass.
@@ -133,8 +130,6 @@ def main() -> None:
         wanted = set(only.split(","))
         queries = [q for q in queries if q.name in wanted]
     for i, q in enumerate(queries):
-        if q.name.startswith("etl_e2e_"):
-            IR.PHASE_LOG.clear()
         t0 = time.perf_counter()
         try:
             df = q.build(spark, sf_dir)
@@ -149,8 +144,6 @@ def main() -> None:
         dt = time.perf_counter() - t0
         timings[q.name] = round(dt, 3)
         total += dt
-        if q.name.startswith("etl_e2e_") and IR.PHASE_LOG:
-            phase_timings[q.name] = [dict(p) for p in IR.PHASE_LOG]
         print(f"# {q.name}: {dt:.3f}s ({n} rows)", file=sys.stderr)
         if i % 10 == 9:
             # release dead DataFrame/RDD references so the ContextCleaner
@@ -246,33 +239,13 @@ def main() -> None:
 
         The rollback-before-every-rep + shared-best-holder discipline lives
         in benchutil.measure_reps (unit-tested with a counting fake — the
-        r8 rerun-warm-model and the r9 slower-rerun-overwrites-decomposition
-        bugs both have failing tests there); this wrapper supplies only the
-        query runner and the etl_e2e_* phase-decomposition capture."""
-        is_e2e = name.startswith("etl_e2e_")
-
-        def _prep():
-            if is_e2e:
-                IR.PHASE_LOG.clear()
+        r8 rerun-warm-model bug has a failing test there); this wrapper
+        supplies only the query runner."""
 
         def _run_once():
             by_name[name].build(spark, sf_dir).count()
 
-        def _capture(dt):
-            # keep the phase decomposition of the BEST repeat —
-            # the one whose total lands in the timings map
-            if is_e2e and IR.PHASE_LOG:
-                phase_timings[name] = [dict(p) for p in IR.PHASE_LOG]
-
-        return measure_reps(
-            _run_once,
-            repeats,
-            snap,
-            holder,
-            deadline=deadline,
-            prep=_prep,
-            capture=_capture,
-        )
+        return measure_reps(_run_once, repeats, snap, holder, deadline=deadline)
 
     def _measure_with_canary(
         spark,
@@ -339,7 +312,7 @@ def main() -> None:
             pass
         snap = cache_snapshot()
         # seed: the settle pass only REPLACES a cell when it improves on the
-        # recorded number — the phase capture must use the same bar
+        # recorded number
         holder = [seed]
         best = _measure(spark, name, repeats, deadline, snap, holder)
         canary = _quick_canary(spark)
@@ -576,7 +549,6 @@ def main() -> None:
         # settle re-measure: full evidence (recorded vs settle_best, canary
         # brackets) so the cleared flag stays auditable
         "settle_confirmed": settle_confirmed,
-        "phase_timings": phase_timings,
         "errors": errors,
     }
     # a BENCH_ONLY smoke run must not clobber the committed full-run artifact

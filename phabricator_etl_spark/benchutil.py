@@ -112,8 +112,6 @@ def measure_reps(
     holder: list | None,
     deadline: float | None = None,
     clock=None,
-    prep=None,
-    capture=None,
 ) -> float | None:
     """Min-of-``repeats`` under the model-cache discipline: the session model
     caches roll back to ``snap`` before EVERY rep, so repeats re-pay builds
@@ -126,11 +124,8 @@ def measure_reps(
 
     ``holder`` is a shared one-element best-so-far spanning the first run AND
     any rerun (and, for the settle pass, seeded with the already-recorded
-    cell): ``capture(dt)`` fires only when the GLOBAL min improves, so a
-    rerun rep slower than the first run's min can never overwrite a phase /
-    stage decomposition with one from a slower run (the r9 advisor hole in
-    both bench.py and scale_bench). ``prep()`` runs after the rollback,
-    outside the timed region. ``clock`` is injectable for tests.
+    cell); it only ever moves down to the GLOBAL min. ``clock`` is
+    injectable for tests.
     """
     import time as _time
 
@@ -141,14 +136,10 @@ def measure_reps(
     best = None
     for _ in range(repeats):
         cache_rollback(snap)
-        if prep is not None:
-            prep()
         t0 = clock()
         run_once()
         dt = clock() - t0
         if holder[0] is None or dt < holder[0]:
-            if capture is not None:
-                capture(dt)
             holder[0] = dt
         best = dt if best is None else min(best, dt)
         if deadline is not None and clock() > deadline:

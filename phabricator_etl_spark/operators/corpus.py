@@ -213,19 +213,18 @@ LIMIT 20
 # token rates — the tokenizer-coverage evaluation run before committing to
 # a vocab size.
 #
-# ONE tokenize pass (r11): the token stream is aggregated once by
-# (lang, w); the vocab is the top-K of that table re-aggregated by w
-# (sum over langs == the global count, exactly), and the coverage pass
-# joins the broadcast vocab against the (lang, w) COUNT table — vocabulary
-# x language sized — instead of against the raw token stream. The r10 plan
-# scanned+tokenized the corpus TWICE (once for the vocab aggregate, once
-# for the coverage join) and ran the vocab broadcast-join per TOKEN; this
-# form does both per distinct (lang, w). n_tokens/n_oov become
+# Shipped plan (r11, plans/r11/corpus_oov_rate_after2.txt): the (lang, w)
+# aggregate `lw` has two consumers and is NOT materialized, so `documents`
+# is scanned and tokenized TWICE — once under the vocab branch, once under
+# the coverage branch — with no ReusedExchange between them. Each scan is
+# aggregated to (lang, w) before anything else happens: the vocab is the
+# top-K of that table re-aggregated by w (sum over langs == the global
+# count, exactly), and the coverage side joins the broadcast vocab against
+# the (lang, w) COUNT table — vocabulary x language sized — instead of
+# against the raw token stream as the r10 plan did. n_tokens/n_oov are
 # count-weighted sums of the same integers, so the output is bit-identical
 # (the permille ratio divides the same exact int64s in double, then
-# rounds). The (lang, w) aggregate is two-consumer (vocab + coverage), so
-# it is localCheckpoint-materialized — vocabulary-sized per language, not
-# corpus-sized.
+# rounds).
 # ---------------------------------------------------------------------------
 
 VOCAB_K = 20

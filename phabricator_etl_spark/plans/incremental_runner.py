@@ -17,7 +17,6 @@ designed to deliver but never tests.
 from __future__ import annotations
 
 import os
-import time
 from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
@@ -147,16 +146,6 @@ def merge_upsert(target: DataFrame | None, staging: DataFrame, key: str) -> Data
     return target.join(staging.select(key), key, "left_anti").unionByName(staging)
 
 
-# Wall-clock decomposition of every run_incremental call, appended per run
-# (r6 verdict #7: the e2e bench entry moved +30% r5->r6 and the phases were
-# not separable from the one total). bench.py snapshots this around the
-# etl_e2e_* entries and writes it to BENCH_DETAIL.json; it costs five
-# perf_counter() reads per run, nothing more. The branch_* keys are wall
-# time INSIDE the concurrent merge pool, so they overlap each other and sum
-# to more than merge_write_wall.
-PHASE_LOG: list[dict[str, float]] = []
-
-
 def run_incremental(
     spark: SparkSession,
     src: PhabSources,
@@ -167,8 +156,6 @@ def run_incremental(
 ) -> dict[str, DataFrame]:
     """One ETL run. Returns the post-merge tables (also written to dest_dir,
     revisions ym-partitioned per SURVEY §4.4)."""
-    phases: dict[str, float] = {}
-    t_phase = time.perf_counter()
     last_run = None if full else read_watermark(spark, dest_dir)
     world = filter_changed_revisions(src, last_run, now)
     # ONE materialized CC pass feeds both the graph-aware invalidation and
@@ -177,8 +164,6 @@ def run_incremental(
     # shape a production run uses: components are computed once per batch
     # and consumed by every downstream step.
     comp = P.stack_components(src).localCheckpoint(eager=True)
-    phases["watermark_and_cc"] = round(time.perf_counter() - t_phase, 3)
-    t_phase = time.perf_counter()
     world = expand_by_stack_component(src, world, comp=comp)
     # Materialize the INVALIDATION SET once: every one of the eight table
     # builds hangs off the expanded revision table, and without this each
@@ -198,8 +183,6 @@ def run_incremental(
         f_repos = pool.submit(lambda: P.dim_repositories(expanded).localCheckpoint(eager=True))
         users, projects, repos = f_users.result(), f_projects.result(), f_repos.result()
         world = PhabSources(**{**expanded.__dict__, "revision": f_rev.result()})
-    phases["expand_and_pin_dims"] = round(time.perf_counter() - t_phase, 3)
-    t_phase = time.perf_counter()
     # stack sizes come from the FULL graph (the filtered world can't see
     # unchanged stack members — stats.py:1117-1119 queries all_revisions)
     full_stacks = P.stack_sizes_from_components(src, comp)
@@ -219,7 +202,6 @@ def run_incremental(
     }
 
     def _merge_and_write(name: str, df: DataFrame) -> DataFrame:
-        t_branch = time.perf_counter()
         key, recency = MERGE_KEYS[name]
         staging = dedup_latest(df, key, recency)
         path = os.path.join(dest_dir, name)
@@ -263,7 +245,6 @@ def run_incremental(
             fs.delete(jvm_path(path), True)
             if not fs.rename(jvm_path(write_path), jvm_path(path)):
                 raise IOError(f"rename {write_path} -> {path} failed")
-        phases[f"branch_{name}"] = round(time.perf_counter() - t_branch, 3)
         return spark.read.parquet(path)
 
     # The eight table branches are independent (distinct dest paths, shared
@@ -276,7 +257,4 @@ def run_incremental(
     with ThreadPoolExecutor(max_workers=len(built)) as pool:
         futures = {name: pool.submit(_merge_and_write, name, df) for name, df in built.items()}
         out = {name: fut.result() for name, fut in futures.items()}
-    phases["merge_write_wall"] = round(time.perf_counter() - t_phase, 3)
-    phases["full" if full else "incremental"] = 1.0
-    PHASE_LOG.append(phases)
     return out

@@ -1,7 +1,7 @@
 """Differential fuzzing: hypothesis-generated relational plans executed on
 BOTH engines from one spec.
 
-The registry gate pins 222 hand-written queries; this module covers the
+The registry gate pins 225 hand-written queries; this module covers the
 space BETWEEN them — arbitrary filter/group/aggregate compositions the hand
 set doesn't enumerate. Each generated spec is lowered twice from the same
 structure: once to a DataFrame plan (the engine under test) and once to SQL

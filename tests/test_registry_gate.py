@@ -1,10 +1,20 @@
 """Gate-window invariants: the driver's correctness report records only the
 FIRST 50 entries of queries() (observed in CORRECTNESS_r01/r02), so the
-curated window must stay intact and fully oracle-backed."""
+curated window must stay intact and fully oracle-backed. The full name list
+is pinned in tests/registry_names.txt, so a lost or reordered query shows up
+as a diff."""
 
 from __future__ import annotations
 
+import sys
+from pathlib import Path
+
+import pytest
+
+from phabricator_etl_spark import registry
 from phabricator_etl_spark.registry import GATE_PRIORITY, oracles_dict, queries_dict
+
+PINNED_NAMES = Path(__file__).with_name("registry_names.txt")
 
 
 def test_gate_window_is_the_curated_fifty():
@@ -24,3 +34,14 @@ def test_gate_window_fully_oracled():
 def test_no_duplicate_query_names():
     names = list(queries_dict())
     assert len(names) == len(set(names))
+
+
+def test_registry_matches_pinned_names():
+    assert list(queries_dict()) == PINNED_NAMES.read_text().split()
+
+
+def test_unimportable_module_fails_loudly(monkeypatch):
+    # a None entry in sys.modules makes any import of that module raise
+    monkeypatch.setitem(sys.modules, "phabricator_etl_spark.plans.cdc", None)
+    with pytest.raises(ImportError):
+        registry.all_queries()
